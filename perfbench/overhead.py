@@ -2,8 +2,9 @@
 
     python3 perfbench/overhead.py --workload ingest --seed 1
 
-Prints the untraced ``pass_s``, the traced ``trace.pass_s``, their
-difference, and the traced run's own bookkeeping time (``trace.self_s``).
+Prints the untraced ``pass_s`` (wall time of one pass, from the detail line),
+the traced ``trace.pass_s``, their difference, and the traced run's own
+bookkeeping time (``trace.self_s``).
 """
 
 from __future__ import annotations
@@ -18,11 +19,15 @@ RUN = Path(__file__).resolve().parent / "run.py"
 
 
 def metrics(workload: str, seed: int, trace: int) -> dict:
+    """The run's metrics, plus its detail line's numbers."""
     p = subprocess.run(
         [sys.executable, str(RUN), "--workload", workload, "--seed", str(seed),
          "--seconds", "1", "--trace", str(trace)],
         capture_output=True, text=True, check=True)
-    return {k: v["value"] for k, v in json.loads(p.stdout.splitlines()[-1])["metrics"].items()}
+    *_, detail, result = p.stdout.splitlines()
+    values = {k: v for k, v in json.loads(detail)["detail"].items() if isinstance(v, float)}
+    values.update({k: v["value"] for k, v in json.loads(result)["metrics"].items()})
+    return values
 
 
 def main() -> None:
