@@ -53,12 +53,26 @@ def duplicate_grain_examples(df: DataFrame, grain: list[str], limit: int = 5) ->
     )
 
 
+def check_grain_counts(
+    df: DataFrame,
+    grain: list[str],
+    total_rows: int,
+    distinct_grains: int,
+    filename: str | None = None,
+) -> None:
+    """The grain decision from precomputed counts: raise GrainValidationError
+    with top-5 examples from ``df`` when ``distinct_grains < total_rows``.
+    Callers that already aggregate the frame (the pipeline folds the counts
+    into its validation pass) skip :func:`grain_counts`' own job."""
+    if total_rows != distinct_grains:
+        examples = [r.asDict() for r in duplicate_grain_examples(df, grain).collect()]
+        raise GrainValidationError(grain, examples, filename)
+
+
 def check_grain(df: DataFrame, grain: list[str], filename: str | None = None) -> None:
     """Raise GrainValidationError with top-5 examples if the grain duplicates."""
     row = grain_counts(df, grain).collect()[0]
-    if row["is_unique"] != 1:
-        examples = [r.asDict() for r in duplicate_grain_examples(df, grain).collect()]
-        raise GrainValidationError(grain, examples, filename)
+    check_grain_counts(df, grain, row["total_rows"], row["distinct_grains"], filename)
 
 
 def run_audit_query(

@@ -15,9 +15,24 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_file_loader_spark.config import SourceConfig
 from etl_file_loader_spark.operators.validate import ERRORS_COL, FILE_ROW_COL, alias_value_map
+
+# the record shape build_dlq emits, so readers of the DLQ table skip schema
+# inference
+DLQ_SCHEMA = T.StructType(
+    [
+        T.StructField("source_filename", T.StringType()),
+        T.StructField("file_row_number", T.LongType()),
+        T.StructField("file_record_data", T.StringType()),
+        T.StructField("validation_errors", T.StringType()),
+        T.StructField("file_load_log_id", T.LongType()),
+        T.StructField("target_table_name", T.StringType()),
+        T.StructField("failed_at", T.TimestampType()),
+    ]
+)
 
 
 def build_dlq(
@@ -62,11 +77,18 @@ def build_dlq(
     )
 
 
+def _stale(filename: str, current_log_id: int) -> Column:
+    return (F.col("source_filename") == filename) & (
+        F.col("file_load_log_id") < F.lit(current_log_id)
+    )
+
+
+def has_stale_dlq(dlq: DataFrame, filename: str, current_log_id: int) -> bool:
+    """Whether earlier runs left DLQ rows for this file: a filter+limit(1)
+    probe, so a clean reload skips :func:`cleanup_dlq`'s full rewrite."""
+    return not dlq.filter(_stale(filename, current_log_id)).limit(1).isEmpty()
+
+
 def cleanup_dlq(dlq: DataFrame, filename: str, current_log_id: int) -> DataFrame:
     """Drop this file's DLQ rows from earlier runs (reference delete/base.py:32-77)."""
-    return dlq.filter(
-        ~(
-            (F.col("source_filename") == filename)
-            & (F.col("file_load_log_id") < F.lit(current_log_id))
-        )
-    )
+    return dlq.filter(~_stale(filename, current_log_id))

@@ -41,7 +41,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl_file_loader_spark.operators.hashing import HASH_COL
@@ -77,6 +78,7 @@ def merge_upsert(
     business_cols: list[str],
     now: Column | None = None,
     salt_buckets: int | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Full-outer-join MERGE rewrite; returns the new target contents.
 
@@ -88,6 +90,11 @@ def merge_upsert(
     ``salt_buckets`` adds a deterministic grain-derived salt as an extra
     equi-join key (see module docstring: redistributes hash-partition
     collision clusters; semantics unchanged).
+
+    ``observation`` rides on the join: the action that writes the result
+    also fills it with ``inserts``, ``updates`` and ``matched`` (stage rows
+    with a target grain), the counts :func:`publish_counts` computes with
+    two extra joins (see :func:`observed_counts`).
     """
     now = now if now is not None else F.current_timestamp()
     data_cols = [c for c in business_cols if c not in grain]
@@ -120,6 +127,13 @@ def merge_upsert(
     # publish/postgresql.py:24-43); matched-but-unchanged rows keep every
     # target value including source_filename / file_load_log_id
     take_stage = changed | (s_exists & ~t_exists)
+    if observation is not None:
+        joined = joined.observe(
+            observation,
+            F.count(F.when(s_exists & ~t_exists, 1)).alias("inserts"),
+            F.count(F.when(changed, 1)).alias("updates"),
+            F.count(F.when(s_exists & t_exists, 1)).alias("matched"),
+        )
 
     def pick(c: str) -> Column:
         return F.when(take_stage, F.col(f"s_{c}")).otherwise(F.col(f"t_{c}")).alias(c)
@@ -162,6 +176,25 @@ def publish_counts(target: DataFrame, stage: DataFrame, grain: list[str]) -> Pub
     updates = int(agg["updates"] or 0)
     inserts = stage.join(t, on=grain, how="left_anti").count()
     return PublishCounts(inserts=inserts, updates=updates, unchanged=matched_n - updates)
+
+
+def observed_counts(observation: Observation) -> PublishCounts:
+    """Read :func:`merge_upsert`'s observed counts once its result is written.
+
+    Same definitions as :func:`publish_counts`: a null hash compare is not
+    an update, so it lands in ``unchanged``. Spark reports no metrics row
+    when the optimizer has folded the whole merge input to an empty
+    relation (both sides provably empty); nothing was staged then, so every
+    count is zero.
+    """
+    try:
+        m = observation.get
+    except Py4JJavaError:
+        m = {}
+    inserts, updates = int(m.get("inserts", 0)), int(m.get("updates", 0))
+    return PublishCounts(
+        inserts=inserts, updates=updates, unchanged=int(m.get("matched", 0)) - updates
+    )
 
 
 def is_file_loaded(target: DataFrame, filename: str) -> bool:

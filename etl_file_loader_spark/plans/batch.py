@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -122,13 +122,18 @@ def batch_ingest(
         publish_ops.LOG_ID_COL, F.lit(log_id).cast("long")
     )
 
+    from etl_file_loader_spark.plans.merge_backend import SparkRewriteMergeBackend
     from etl_file_loader_spark.plans.warehouse import BUCKET_COL, grain_bucket
 
     with warehouse.mutate(config.target_table):
         n_buckets = warehouse.table_buckets(config.target_table) or warehouse.n_buckets
         bucket = grain_bucket(config.grain, n_buckets)
         if not warehouse.exists(config.target_table):
-            merged = stage.withColumn(
+            # every resolved row inserts; the write itself counts them
+            observation = Observation()
+            merged = stage.observe(
+                observation, F.count(F.lit(1)).alias("inserts")
+            ).withColumn(
                 publish_ops.CREATED_COL, F.current_timestamp()
             ).withColumn(publish_ops.UPDATED_COL, F.lit(None).cast("timestamp"))
             warehouse.merge_overwrite(
@@ -137,22 +142,20 @@ def batch_ingest(
                 touched_buckets=None,
                 partition_by=config.target_partition_by,
             )
-            inserts = warehouse.read_table(config.target_table).count()
-            updates = 0
+            counts = publish_ops.observed_counts(observation)
         else:
             # bounded rewrite: read + rewrite only the stage-touched buckets
             touched = sorted(
                 r[0] for r in stage.select(bucket.alias("_b")).distinct().collect()
             )
-            target = warehouse.read_table_buckets(config.target_table, touched)
-            counts = publish_ops.publish_counts(target, stage, config.grain)
-            inserts, updates = counts.inserts, counts.updates
-            merged = publish_ops.merge_upsert(
-                target, stage, config.grain, config.business_columns
-            )
-            warehouse.merge_overwrite(
+            counts = SparkRewriteMergeBackend().merge(
+                warehouse,
                 config.target_table,
-                merged.withColumn(BUCKET_COL, bucket),
+                warehouse.read_table_buckets(config.target_table, touched),
+                stage,
+                config.grain,
+                config.business_columns,
+                bucket,
                 touched_buckets=touched,
                 partition_by=config.target_partition_by,
             )
@@ -160,8 +163,8 @@ def batch_ingest(
     return BatchResult(
         files_published=sorted(published),
         files_rejected=rejected,
-        inserts=inserts,
-        updates=updates,
+        inserts=counts.inserts,
+        updates=counts.updates,
         dlq_rows=n_dlq,
         stats=[r.asDict() for r in stats],
     )

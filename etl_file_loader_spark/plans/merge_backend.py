@@ -6,12 +6,15 @@ with native MERGE (Delta Lake, Iceberg) would rather hand the same logical
 merge to the format's transaction layer. This module is that seam:
 
 - :class:`MergeBackend` — the protocol: one ``merge`` call owning the whole
-  "combine stage with target and persist the new contents" step.
+  "combine stage with target and persist the new contents" step, returning
+  the insert/update/unchanged :class:`PublishCounts` of that merge.
 - :class:`SparkRewriteMergeBackend` — the default. Calls EXACTLY the code
   the pipeline always called (``publish_ops.merge_upsert`` -> full-outer
   join rewrite, then ``Warehouse.merge_overwrite`` -> bounded bucket
   overwrite with carry-over), so behavior with no backend configured is
   byte-identical to rounds 1-5 (pinned by tests/test_merge_backend.py).
+  Its counts are observed on the merge join during the write, so they cost
+  no job of their own.
 - :class:`DeltaMergeBackend` — the documented adapter point. Builds the
   equivalent ``DeltaTable.merge`` (whenMatched hash-guard update /
   whenNotMatched insert — the same MERGE the reference issues per dialect,
@@ -28,9 +31,10 @@ from __future__ import annotations
 
 from typing import Protocol
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 from etl_file_loader_spark.operators import publish as publish_ops
+from etl_file_loader_spark.operators.publish import PublishCounts
 
 
 class MergeBackend(Protocol):
@@ -50,7 +54,7 @@ class MergeBackend(Protocol):
         touched_buckets: list[int] | None,
         salt_buckets: int | None = None,
         partition_by: list[str] | None = None,
-    ) -> None: ...
+    ) -> PublishCounts: ...
 
 
 class SparkRewriteMergeBackend:
@@ -69,11 +73,13 @@ class SparkRewriteMergeBackend:
         touched_buckets: list[int] | None,
         salt_buckets: int | None = None,
         partition_by: list[str] | None = None,
-    ) -> None:
+    ) -> PublishCounts:
         from etl_file_loader_spark.plans.warehouse import BUCKET_COL
 
+        observation = Observation()
         merged = publish_ops.merge_upsert(
-            target, stage, grain, business_cols, salt_buckets=salt_buckets
+            target, stage, grain, business_cols, salt_buckets=salt_buckets,
+            observation=observation,
         )
         warehouse.merge_overwrite(
             table,
@@ -81,6 +87,7 @@ class SparkRewriteMergeBackend:
             touched_buckets=touched_buckets,
             partition_by=partition_by,
         )
+        return publish_ops.observed_counts(observation)
 
 
 class DeltaMergeBackend:
@@ -91,6 +98,9 @@ class DeltaMergeBackend:
     through the Delta transaction log instead of the warehouse's versioned
     snapshot directories — no bucket carry-over needed, Delta's data
     skipping replaces the grain-bucket partition pruning.
+
+    Counts come from :func:`publish_counts` over the same target and
+    stage, taken before the MERGE commits.
 
     ``table_path`` is the Delta table location. The warehouse's versioned
     read path is bypassed; callers adopting this backend read the target
@@ -121,7 +131,7 @@ class DeltaMergeBackend:
         touched_buckets: list[int] | None,
         salt_buckets: int | None = None,
         partition_by: list[str] | None = None,
-    ) -> None:  # pragma: no cover - needs Delta jars (absent here)
+    ) -> PublishCounts:  # pragma: no cover - needs Delta jars (absent here)
         from delta.tables import DeltaTable
 
         from etl_file_loader_spark.operators.hashing import HASH_COL
@@ -138,7 +148,8 @@ class DeltaMergeBackend:
             stage.withColumn(CREATED_COL, F.current_timestamp()).withColumn(
                 UPDATED_COL, F.lit(None).cast("timestamp")
             ).write.format("delta").save(self.table_path)
-            return
+            return PublishCounts(inserts=stage.count(), updates=0, unchanged=0)
+        counts = publish_ops.publish_counts(target, stage, grain)
         tgt = DeltaTable.forPath(spark, self.table_path)
         data_cols = [c for c in business_cols if c not in grain]
         set_cols = data_cols + [HASH_COL, FILENAME_COL, LOG_ID_COL]
@@ -157,3 +168,4 @@ class DeltaMergeBackend:
             .whenNotMatchedInsert(values=insert_vals)
             .execute()
         )
+        return counts

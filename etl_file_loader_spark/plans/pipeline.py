@@ -10,12 +10,20 @@ Spark re-expression: the read->rename->validate->split chain is ONE lazy plan;
 table is an artifact of row-at-a-time DB loading). Actions, in order:
 
     1. duplicate-file check     filter+limit on target        (J1)
-    2. validate + cache; one groupBy(_is_valid).count() pass  (P1-P9, A4)
+    2. validate + cache; ONE scalar aggregate carries every   (P1-P9, A4,
+       per-file count: rows, invalid rows, distinct grains     A1)
+       and touched grain buckets (the last two over valid
+       rows only)
     3. DLQ append for invalid rows                            (K2, P5)
     4. threshold check -> maybe fail                          (A4)
-    5. grain audit + custom audit SQL on the valid side       (A1-A3)
-    6. MERGE into target + insert/update counts               (J2-J4, A5)
-    7. DLQ cleanup of earlier runs for this file              (J5)
+    5. grain decision from the step-2 counts (a job only to   (A1-A3)
+       fetch duplicate examples) + custom audit SQL
+    6. MERGE into target; insert/update/unchanged counts are  (J2-J4, A5)
+       observed on the merge join during its write (a first
+       load inserts the valid-row count)
+    7. DLQ cleanup of earlier runs for this file: a limit(1)  (J5)
+       probe on the DLQ read with its known schema, and a
+       rewrite only when the probe finds stale rows
 
 Failure at any step raises the taxonomy error; the run log records per-stage
 timings either way. Multi-file parallelism: the reference uses a thread pool
@@ -45,7 +53,7 @@ from etl_file_loader_spark.operators.publish import (
     PublishCounts,
 )
 from etl_file_loader_spark.plans.runlog import RunLog, next_log_id
-from etl_file_loader_spark.plans.warehouse import Warehouse
+from etl_file_loader_spark.plans.warehouse import BUCKET_COL, Warehouse, grain_bucket
 from etl_file_loader_spark.registry import SourceRegistry
 from etl_file_loader_spark.sources import read_source
 
@@ -127,6 +135,14 @@ class PipelineRunner:
             dest = fsmod.join(self.duplicate_dir, renamed)
         hfs.move(self.path, dest)
 
+    def _bucket_count(self) -> int:
+        """Grain-bucket count of the target: its persisted count, or the
+        warehouse default for a table the first load will create."""
+        return (
+            self.warehouse.table_buckets(self.config.target_table)
+            or self.warehouse.n_buckets
+        )
+
     def run(self) -> RunResult:
         cfg = self.config
         validated = None
@@ -165,18 +181,28 @@ class PipelineRunner:
                 # cache: the audit and publish stages each re-read the
                 # validated frame (and the DLQ build when rows fail) —
                 # recomputing the validation projection per pass measures
-                # ~40% slower than materializing once. Counts come from one
-                # scalar aggregate (no groupBy shuffle).
+                # ~40% slower than materializing once. Every per-file count
+                # comes from this one scalar aggregate; the grain audit and
+                # the merge's touched buckets look at valid rows only,
+                # bucketed with the count the target has right now.
+                n_buckets = self._bucket_count()
+                ok = F.col(validate_ops.VALID_COL)
                 validated = validate_ops.validate(renamed, cfg).cache()
                 c = validated.agg(
                     F.count(F.lit(1)).alias("_n"),
-                    F.sum(
-                        F.when(F.col(validate_ops.VALID_COL), 0).otherwise(1)
-                    ).alias("_bad"),
+                    F.sum(F.when(ok, 0).otherwise(1)).alias("_bad"),
+                    F.count_distinct(
+                        *[F.when(ok, F.col(g)) for g in cfg.grain]
+                    ).alias("_grains"),
+                    F.collect_set(
+                        F.when(ok, grain_bucket(cfg.grain, n_buckets))
+                    ).alias("_buckets"),
                 ).first()
                 n_total = c["_n"] or 0
                 n_invalid = int(c["_bad"] or 0)
                 n_valid = n_total - n_invalid
+                n_grains = c["_grains"]
+                touched = sorted(c["_buckets"])
                 st.row_count = n_total
                 valid, invalid = validate_ops.split(validated)
 
@@ -204,27 +230,21 @@ class PipelineRunner:
             with self.log.stage("audit_data"):
                 from etl_file_loader_spark.config import stage_table_name
 
-                audit_ops.check_grain(stage, cfg.grain, self.filename)
+                audit_ops.check_grain_counts(
+                    stage, cfg.grain, n_valid, n_grains, self.filename
+                )
                 audit_ops.check_audits(
                     self.spark, stage, cfg.audit_query, self.filename,
                     view_name=stage_table_name(self.filename),
                 )
 
             with self.log.stage("publish_data") as st:
-                from etl_file_loader_spark.plans.warehouse import (
-                    BUCKET_COL,
-                    grain_bucket,
-                )
-
                 with self.warehouse.mutate(cfg.target_table):
-                    n_buckets = (
-                        self.warehouse.table_buckets(cfg.target_table)
-                        or self.warehouse.n_buckets
-                    )
-                    bucket = grain_bucket(cfg.grain, n_buckets)
+                    n_locked = self._bucket_count()
+                    bucket = grain_bucket(cfg.grain, n_locked)
                     if not self.warehouse.exists(cfg.target_table):
-                        # first load: everything inserts — skip the three
-                        # empty-target joins (counts + merge) entirely
+                        # first load: everything inserts — skip the
+                        # empty-target merge join entirely
                         merged = stage.withColumn(
                             publish_ops.CREATED_COL, F.current_timestamp()
                         ).withColumn(
@@ -236,23 +256,26 @@ class PipelineRunner:
                             touched_buckets=None,
                             partition_by=cfg.target_partition_by,
                         )
+                        # the grain audit passed, so every valid row is
+                        # one target row
                         pub_counts = PublishCounts(
-                            inserts=self.warehouse.read_table(cfg.target_table).count(),
-                            updates=0,
-                            unchanged=0,
+                            inserts=n_valid, updates=0, unchanged=0
                         )
                     else:
                         # bounded rewrite: only the grain-hash buckets the
                         # stage rows land in are read (partition pruning) and
                         # rewritten; untouched buckets carry over as hard
                         # links — O(stage-touched partitions) per load, not
-                        # O(target)
-                        touched = sorted(
-                            r[0]
-                            for r in stage.select(
-                                bucket.alias("_b")
-                            ).distinct().collect()
-                        )
+                        # O(target). The set came with the validation counts;
+                        # it is recomputed only if the table's bucket count
+                        # changed since then.
+                        if n_locked != n_buckets:
+                            touched = sorted(
+                                r[0]
+                                for r in stage.select(
+                                    bucket.alias("_b")
+                                ).distinct().collect()
+                            )
                         # schema evolution forces a FULL rewrite: linked-over
                         # untouched buckets would otherwise keep the old
                         # parquet schema (mixed schemas across partitions)
@@ -289,8 +312,7 @@ class PipelineRunner:
                                 target = target.withColumn(
                                     f.name, F.lit(None).cast(f.dtype)
                                 )
-                        pub_counts = publish_ops.publish_counts(target, stage, cfg.grain)
-                        self.merge_backend.merge(
+                        pub_counts = self.merge_backend.merge(
                             self.warehouse,
                             cfg.target_table,
                             target,
@@ -307,12 +329,14 @@ class PipelineRunner:
             with self.log.stage("cleanup_dlq_records"):
                 with self.warehouse.mutate(DLQ_TABLE):
                     if self.warehouse.exists(DLQ_TABLE):
-                        cleaned = dlq_ops.cleanup_dlq(
-                            self.warehouse.read_table(DLQ_TABLE),
-                            self.filename,
-                            self.log.log_id,
+                        dlq = self.warehouse.read_table(
+                            DLQ_TABLE, schema=dlq_ops.DLQ_SCHEMA
                         )
-                        self.warehouse.overwrite(DLQ_TABLE, cleaned)
+                        if dlq_ops.has_stale_dlq(dlq, self.filename, self.log.log_id):
+                            cleaned = dlq_ops.cleanup_dlq(
+                                dlq, self.filename, self.log.log_id
+                            )
+                            self.warehouse.overwrite(DLQ_TABLE, cleaned)
 
             return RunResult(True, self.filename, counts=pub_counts)
         finally:
@@ -323,17 +347,6 @@ class PipelineRunner:
                 from etl_file_loader_spark.fs import FS
 
                 FS(self.spark).delete(self.path)
-
-
-def _empty_target(stage):
-    """Zero-row target with full system-column schema, for first loads."""
-    from etl_file_loader_spark.operators.publish import CREATED_COL, UPDATED_COL
-
-    return (
-        stage.limit(0)
-        .withColumn(CREATED_COL, F.current_timestamp())
-        .withColumn(UPDATED_COL, F.lit(None).cast("timestamp"))
-    )
 
 
 @dataclass

@@ -140,26 +140,25 @@ class Warehouse:
     ) -> DataFrame:
         """Current snapshot — or a retained older one via ``version`` (time
         travel, the COW analogue of Delta's VERSION AS OF; only the last
-        ``keep_versions`` snapshots are retained). Empty frame with
-        ``schema`` if the table doesn't exist.
+        ``keep_versions`` snapshots are retained). ``schema`` is the table's
+        known schema: an existing table is read with it, which skips Spark's
+        parquet-footer inference job; a missing table yields an empty frame
+        with it.
         """
         versions = self._versions(table)
         if not versions:
             if schema is None:
                 raise FileNotFoundError(f"table {table} does not exist and no schema given")
             return self.spark.createDataFrame([], schema)
-        if version is not None:
-            if version not in versions:
-                raise FileNotFoundError(
-                    f"table {table} version {version} not retained "
-                    f"(available: {versions})"
-                )
-            return self._drop_internal(
-                self.spark.read.parquet(self._p(table, f"_v{version}"))
+        if version is None:
+            version = versions[-1]
+        elif version not in versions:
+            raise FileNotFoundError(
+                f"table {table} version {version} not retained "
+                f"(available: {versions})"
             )
-        return self._drop_internal(
-            self.spark.read.parquet(self._p(table, f"_v{versions[-1]}"))
-        )
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return self._drop_internal(reader.parquet(self._p(table, f"_v{version}")))
 
     @staticmethod
     def _drop_internal(df: DataFrame) -> DataFrame:

@@ -66,6 +66,19 @@ spark.serializer                  Kryo        shuffle/broadcast bytes: Kryo is
                                               for the struct-heavy rows the
                                               validators emit; at 100 TB
                                               shuffle volume IS the bill.
+spark.sql.codegen.cache.          2000        generated-class cache (LRU,
+  maxEntries                                  default 100). MEASURED: at 100
+                                              the LRU thrashes — a warm pass
+                                              that repeats the previous one
+                                              still recompiled ~210 classes
+                                              (ingest) and ~265 (curation
+                                              suite) in Janino, driver CPU;
+                                              at 2000 that fell to ~20. A
+                                              class is a few KiB of driver
+                                              metaspace. Fixed, not env or
+                                              cluster-scaled: the working set
+                                              follows the plan shapes, not
+                                              the data size.
 ================================  ==========  =================================
 """
 
@@ -74,6 +87,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# generated-class cache size; see the conf table above
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def engine_confs(cpus: int) -> dict[str, str]:
@@ -90,6 +106,7 @@ def engine_confs(cpus: int) -> dict[str, str]:
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         # PySpark 4 captures the user call site (a Python stack walk +
         # JVM thread-local write) on EVERY DataFrame API call to enrich
         # error messages; profiled at ~15% of plan-construction time on

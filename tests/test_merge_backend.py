@@ -125,7 +125,7 @@ def test_pipeline_uses_injected_backend(spark, tmp_path):
                 {"table": table, "grain": list(grain),
                  "touched": list(touched_buckets or [])}
             )
-            super().merge(warehouse, table, target, stage, grain,
+            return super().merge(warehouse, table, target, stage, grain,
                           business_cols, bucket, touched_buckets,
                           salt_buckets, partition_by)
 

@@ -17,6 +17,8 @@ def test_engine_conf_table_values():
     assert int(c["spark.sql.files.maxPartitionBytes"]) == 128 * 1024 * 1024
     assert c["spark.sql.execution.arrow.pyspark.enabled"] == "true"
     assert c["spark.serializer"].endswith("KryoSerializer")
+    # sized to the warm codegen working set; a constant, not env-scaled
+    assert c["spark.sql.codegen.cache.maxEntries"] == "2000"
 
 
 def test_engine_confs_env_override(monkeypatch):
